@@ -2,9 +2,7 @@
 
 The sequential left-to-right `F.aggregate` fold gives bit-identical doubles
 to DuckDB's `list_reduce`, making cosine similarities oracle-comparable
-without rounding. For throughput-critical paths (IVF probe over millions of
-vectors) `cosine_topk_pandas` offers the Arrow-batched NumPy alternative —
-faster but float-order nondeterministic, so it backs rows-only queries.
+without rounding.
 """
 
 from __future__ import annotations

@@ -20,7 +20,6 @@ rebuild.
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Callable
 
 # (name, dict, on_evict) — on_evict is called with each removed value.
@@ -33,10 +32,6 @@ def register_memo(
     """Register a module-level memo dict for central clearing."""
     _REGISTRY.append((name, memo, on_evict))
     return memo
-
-
-def _rmtree_value(path) -> None:
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def clear_memos(spark=None) -> dict[str, int]:

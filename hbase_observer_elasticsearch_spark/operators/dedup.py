@@ -77,12 +77,6 @@ def shingle_docs(docs: DataFrame, w: int = SHINGLE_W) -> DataFrame:
     return docs.select("doc_id", F.explode(F.array_distinct(arr)).alias("s"))
 
 
-def _coded_shingles(docs: DataFrame) -> DataFrame:
-    return shingle_docs(docs).select(
-        "doc_id", H.token_code(F.col("s")).alias("code"), "s"
-    )
-
-
 # Process-wide memo of the corpus shingle pass (r13 optimization round):
 # (doc_id, s, code) — distinct 3-word shingles plus the portable md5
 # token code, localCheckpointed once per (app, sf_dir). Fourteen

@@ -149,33 +149,70 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", norm(F.col("embedding"))
-    )  # candidate norm once per vector, not once per (query, candidate) pair
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(spread(e))  # scoring runs on the candidate partitions
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("embedding")) / (F.col("qn") * F.col("nrm")))
-            .alias("cos_sim"),
+def _cosine_knn(
+    queries: DataFrame, cands: DataFrame, k: int, on: str | None = None
+) -> DataFrame:
+    """Exact cosine k-NN: the one kernel behind every exact cosine top-k.
+
+    ``queries`` is ``(query_id, qv[, on])``, ``cands`` is ``(vec_id,
+    embedding[, on])``. Returns ``(query_id, neighbor_id[, on], cos_sim,
+    rk)`` for ``rk <= k``, ``rk`` a BIGINT ranked by cos_sim descending,
+    then neighbor_id — the oracle's ``ROW_NUMBER() OVER (PARTITION BY
+    query_id ORDER BY cos_sim DESC, neighbor_id)``, so equal cosines
+    (duplicate vectors) resolve by id. A vector is never its own
+    neighbor.
+
+    Norms are folded once per vector before the pair stage, not once per
+    pair; ``dot / (qn * nrm)`` with the sequential folds of
+    functions/vectors.py is bit-identical to ``sql_cosine``.
+
+    Plan: with ``on=None`` the small query set is broadcast against
+    spread candidates (one scan, no shuffle until the per-query window).
+    With ``on`` (a blocking column: IVF cell, label, k-means cell) the
+    spread queries equi-join the candidates on it and Catalyst broadcasts
+    the smaller side, so the pair stage costs sum(block^2), never n^2.
+    """
+    qn = norm(F.col("qv")).alias("qn")
+    nrm = norm(F.col("embedding")).alias("nrm")
+    if on is None:
+        pairs = F.broadcast(queries.select("query_id", "qv", qn)).crossJoin(
+            spread(cands).select("vec_id", "embedding", nrm)
         )
+        keys = ["query_id", F.col("vec_id").alias("neighbor_id")]
+    else:
+        pairs = spread(queries).select("query_id", "qv", on, qn).join(
+            cands.select("vec_id", "embedding", on, nrm), on
+        )
+        keys = ["query_id", F.col("vec_id").alias("neighbor_id"), on]
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        *keys,
+        (dot(F.col("qv"), F.col("embedding")) / (F.col("qn") * F.col("nrm")))
+        .alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOPK)
+        .filter(F.col("rk") <= k)
     )
+
+
+def _as_queries(e: DataFrame, *cols: str) -> DataFrame:
+    """``e``'s vectors as a _cosine_knn query set ``(query_id, qv, *cols)``."""
+    return e.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), *cols
+    )
+
+
+def _query_vectors(e: DataFrame) -> DataFrame:
+    """The fixture query set: vec_id < N_QUERIES."""
+    return _as_queries(e.filter(F.col("vec_id") < N_QUERIES))
+
+
+def _bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "embeddings")
+    return _cosine_knn(_query_vectors(e), e, TOPK)
 
 
 @register(
@@ -208,34 +245,11 @@ def similarity_nn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     e = load_table(spark, sf_dir, "embeddings")
-    # norms once per vector before the pair join (same doubles, ~3× fewer
-    # HOF folds per pair than per-pair cosine())
-    en = e.withColumn("nrm", norm(F.col("embedding")))
-    # probe side spread across cores: pair scoring then runs map-side on
-    # every partition (the build side is small enough that Catalyst
-    # broadcasts it here; at scale it becomes a label-co-partitioned join
-    # with the same code)
-    a = spread(en).select("vec_id", "label", F.col("embedding").alias("va"),
-                          F.col("nrm").alias("na"))
-    b = en.select(F.col("vec_id").alias("nn_id"), "label",
-                  F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
-    scored = (
-        a.join(b, "label")
-        .filter(F.col("vec_id") != F.col("nn_id"))
-        .select(
-            "vec_id",
-            "label",
-            "nn_id",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("nn_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
+    return _cosine_knn(_as_queries(e, "label"), e, 1, on="label").select(
+        F.col("query_id").alias("vec_id"),
+        "label",
+        F.col("neighbor_id").alias("nn_id"),
+        "cos_sim",
     )
 
 
@@ -563,8 +577,10 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     use exact decimal sums, so the whole probe+search pipeline is
     hash-checked against the DuckDB restatement.
 
-    Plan: centroids = one tiny agg (n_cells × dim), broadcast both the
-    query set and the probe map; candidate scan shrinks ~n_cells/probes×.
+    Plan: centroids = one tiny agg (n_cells × dim), broadcast against the
+    query set; the ≤ |queries|×probes probe rows then join the candidates
+    on cell (_cosine_knn's blocked plan), so the scored pairs shrink
+    ~n_cells/probes×.
     At 100 TB the cells would be a partition column so probe pruning
     becomes partition pruning at the scan.
     """
@@ -592,44 +608,24 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("qn"),  # query norm hoisted out of the scan
-    )
     # probe selection: 3 best cells per query by centroid cosine
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("c_sim").desc(), F.col("cell")
     )
     probes = (
-        F.broadcast(q)
+        F.broadcast(_query_vectors(e))
         .crossJoin(F.broadcast(cent))
         .select(
-            "query_id", "qv", "qn", "cell",
+            "query_id", "qv", "cell",
             cosine(F.col("qv"), F.col("cv")).alias("c_sim"),
         )
         .withColumn("pr", F.row_number().over(probe_w))
         .filter(F.col("pr") <= N_PROBES)
-        .select("query_id", "qv", "qn", "cell")
+        .select("query_id", "qv", "cell")
     )
-
-    cands = spread(e).withColumn("nrm", norm(F.col("embedding")))
-    scored = (
-        cands.join(F.broadcast(probes), cands.label == probes.cell)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("embedding")) / (F.col("qn") * F.col("nrm")))
-            .alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOPK)
+    cands = e.select("vec_id", "embedding", F.col("label").alias("cell"))
+    return _cosine_knn(probes, cands, TOPK, on="cell").select(
+        "query_id", "neighbor_id", "cos_sim", "rk"
     )
 
 
@@ -2150,31 +2146,10 @@ def similarity_recall_truncated(
         "query_id", "neighbor_id"
     )
     e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.slice("embedding", 1, TRUNC_DIM).alias("tv")
-    ).withColumn("nrm", norm(F.col("tv")))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("tv").alias("qv"),
-        F.col("nrm").alias("qn"),
+        "vec_id", F.slice("embedding", 1, TRUNC_DIM).alias("embedding")
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(spread(e))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("tv")) / (F.col("qn") * F.col("nrm")))
-            .alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    trunc_top = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "neighbor_id")
+    trunc_top = _cosine_knn(_query_vectors(e), e, TOPK).select(
+        "query_id", "neighbor_id"
     )
     hits = trunc_top.join(bf, ["query_id", "neighbor_id"]).groupBy(
         "query_id"
@@ -3040,29 +3015,17 @@ def quality_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_session_conf(spark)
     lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    al = _semdedup_asgn(spark, sf_dir).join(lab, "vec_id")
-    a = al.select("vec_id", "cluster_id", F.col("embedding").alias("va"),
-                  F.col("nrm").alias("na"))
-    b = al.select("cluster_id", F.col("vec_id").alias("nb_id"),
-                  F.col("label").alias("n_label"),
-                  F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nb_id")
+    asgn = _semdedup_asgn(spark, sf_dir)
+    knn = _cosine_knn(
+        _as_queries(asgn, "cluster_id"), asgn, K_NOISE, on="cluster_id"
+    ).join(
+        lab.select(F.col("vec_id").alias("neighbor_id"),
+                   F.col("label").alias("n_label")),
+        "neighbor_id",
     )
-    knn = (
-        a.join(b, "cluster_id")
-        .filter(F.col("nb_id") != F.col("vec_id"))
-        .select(
-            "vec_id",
-            "nb_id",
-            "n_label",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-            .alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_NOISE)
+    votes = knn.groupBy(F.col("query_id").alias("vec_id"), "n_label").agg(
+        F.count("*").alias("c")
     )
-    votes = knn.groupBy("vec_id", "n_label").agg(F.count("*").alias("c"))
     w2 = Window.partitionBy("vec_id").orderBy(F.col("c").desc(), "n_label")
     maj = (
         votes.withColumn("rn", F.row_number().over(w2))
@@ -3923,35 +3886,11 @@ def similarity_filtered_ann_recall(
     one row per query vector.
     """
     ensure_session_conf(spark)
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", norm(F.col("embedding"))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
+    e = load_table(spark, sf_dir, "embeddings")
     # PRE-FILTER: predicate on the candidate side, pushed to the scan.
     cand = e.filter(F.expr(FILTER_PRED_SQL))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(spread(cand))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                dot(F.col("qv"), F.col("embedding"))
-                / (F.col("qn") * F.col("nrm"))
-            ).alias("cos_sim"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     exact_f = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= TOPK)
+        _cosine_knn(_query_vectors(e), cand, TOPK)
         .select("query_id", "neighbor_id")
         .localCheckpoint()  # tiny; joined twice below
     )
@@ -4066,40 +4005,9 @@ def similarity_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     reversed key, and the rollup is node-grain.
     """
     ensure_session_conf(spark)
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", norm(F.col("embedding"))
-    )
-    # spread the PROBE side too (r13 optimization round): Catalyst
-    # broadcasts the other (already-spread) side, so the streamed side's
-    # single scan split was where every pair's dot product ran — one
-    # core. Measured 2.9s -> 0.8s for the knn stage, rows identical.
-    a = spread(e).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlbl"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = (
-        a.join(
-            spread(e),
-            (F.col("label") == F.col("qlbl"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                dot(F.col("qv"), F.col("embedding"))
-                / (F.col("qn") * F.col("nrm"))
-            ).alias("cos_sim"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
+    e = load_table(spark, sf_dir, "embeddings")
     knn = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= MUTUAL_KNN_K)
+        _cosine_knn(_as_queries(e, "label"), e, MUTUAL_KNN_K, on="label")
         .select("query_id", "neighbor_id")
         .localCheckpoint()  # n x k rows; both sides of the mutuality join
     )

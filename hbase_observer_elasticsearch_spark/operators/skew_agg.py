@@ -104,23 +104,6 @@ def skewed_fact_dim(
     return fact, dim
 
 
-def plain_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNSALTED shuffle join over the same skewed inputs — the shape
-    you write when you let AQE's runtime skew-join splitting
-    (spark.sql.adaptive.skewJoin.enabled) handle the hot key instead of
-    salting by hand. Same answer as join_salted_skew; the A/B note in
-    PARITY.md records when each wins."""
-    ensure_session_conf(spark)
-    fact, dim = skewed_fact_dim(spark, sf_dir)
-    joined = fact.hint("merge").join(dim, "join_key")
-    return joined.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .cast("double")
-        .alias("sum_value"),
-    )
-
-
 @register(
     "join_salted_skew",
     oracle="""

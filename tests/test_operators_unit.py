@@ -1,14 +1,17 @@
 """Unit tests on tiny literal DataFrames: shingling, hashing portability,
-latest_by_key, vector math."""
+latest_by_key, vector math, the exact cosine k-NN kernel."""
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from hbase_observer_elasticsearch_spark.functions import hashing as H
-from hbase_observer_elasticsearch_spark.functions.vectors import cosine
+from hbase_observer_elasticsearch_spark.functions.vectors import cosine, sql_cosine
 from hbase_observer_elasticsearch_spark.operators.cdc import latest_by_key
 from hbase_observer_elasticsearch_spark.operators.dedup import shingle_docs
+from hbase_observer_elasticsearch_spark.operators.similarity import _cosine_knn
 
 
 def test_shingles_short_docs(spark):
@@ -64,6 +67,67 @@ def test_cosine_known_values(spark):
     assert got[0] == 0.0
     assert abs(got[1] - 1.0) < 1e-12
     assert got[2] == 1.0
+
+
+# (vec_id, blk, embedding): two blocks of 4 and 3 vectors; 1/2 and 5/6 are
+# duplicates, so their cosines to any query tie exactly and only the
+# neighbor_id tie-break orders them.
+_KNN_VECS = [
+    (0, 0, [1.0, 2.0, 0.5]),
+    (1, 0, [2.0, 1.0, 0.0]),
+    (2, 0, [2.0, 1.0, 0.0]),
+    (3, 0, [-1.0, 0.25, 3.0]),
+    (4, 1, [0.5, 0.5, 0.5]),
+    (5, 1, [3.0, -1.0, 1.0]),
+    (6, 1, [3.0, -1.0, 1.0]),
+]
+_KNN_K = 5  # larger than either block
+
+
+def _duckdb_knn(query_ids, on):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE c (vec_id BIGINT, blk INT, embedding FLOAT[])")
+    con.executemany("INSERT INTO c VALUES (?, ?, ?)", _KNN_VECS)
+    blk, c_blk = ("blk, ", "c.blk, ") if on else ("", "")
+    same = "AND c.blk = q.blk" if on else ""
+    ids = ", ".join(map(str, query_ids))
+    return con.execute(f"""
+      WITH q AS (SELECT vec_id AS query_id, blk, embedding AS qv
+                 FROM c WHERE vec_id IN ({ids}))
+      SELECT * FROM (
+        SELECT query_id, neighbor_id, {blk}cos_sim,
+               ROW_NUMBER() OVER (PARTITION BY query_id
+                                  ORDER BY cos_sim DESC, neighbor_id) AS rk
+        FROM (SELECT q.query_id, c.vec_id AS neighbor_id, {c_blk}
+                     {sql_cosine('q.qv', 'c.embedding')} AS cos_sim
+              FROM q JOIN c ON c.vec_id <> q.query_id {same}) s
+      ) t WHERE rk <= {_KNN_K}
+    """).fetchall()
+
+
+@pytest.mark.parametrize("on", [None, "blk"])
+def test_cosine_knn_matches_duckdb_row_number(spark, on):
+    """Exact equality, cos_sim bit for bit, against sql_cosine +
+    ROW_NUMBER: self-pairs excluded, duplicate-vector ties broken by
+    neighbor_id, k larger than a block, broadcast and blocked plans."""
+    query_ids = [0, 1, 4, 5]
+    c = spark.createDataFrame(
+        _KNN_VECS, "vec_id bigint, blk int, embedding array<float>"
+    )
+    q = c.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), "blk"
+    )
+    if on is None:
+        q, c = q.drop("blk"), c.drop("blk")
+    got_df = _cosine_knn(q, c, _KNN_K, on=on)
+    assert dict(got_df.dtypes)["rk"] == "bigint"
+    got = sorted(tuple(r) for r in got_df.collect())
+    want = sorted(_duckdb_knn(query_ids, on))
+    assert got == want
+    # the fixture really exercises the tie-break and the short blocks
+    assert any(a[0] == b[0] and a[-2] == b[-2] for a, b in zip(got, got[1:]))
+    per_query = [sum(r[0] == qid for r in got) for qid in query_ids]
+    assert per_query == ([_KNN_K] * 4 if on is None else [3, 3, 2, 2])
 
 
 def test_pair_fanout_caps_hot_buckets(spark):

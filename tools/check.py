@@ -19,12 +19,14 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout checks its own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from hbase_observer_elasticsearch_spark import registry  # noqa: E402
 from hbase_observer_elasticsearch_spark.catalog import TABLES  # noqa: E402
